@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from lottery_end_to_end_etl_data_pipeline_spark.operators.similarity import ivf_assign
 from lottery_end_to_end_etl_data_pipeline_spark.operators.text import tokens
@@ -1032,21 +1033,23 @@ def _window_hashes(
     df: DataFrame, text_col: str, id_col: str, k: int
 ) -> DataFrame:
     """(id, doc token count, window start pos, md5 of the k-token
-    window) for every sliding window — tokenization stays a Catalyst
-    expression (`tokens`; Java regex/lowercase semantics untouched),
-    then windows are joined and hashed in a mapInArrow kernel
-    (r13, guide §4.2): the previous all-Catalyst form evaluated an
-    interpreted `md5(array_join(slice(...)))` lambda per window —
-    O(n·k) copies per doc, 4.5 s of the 7.1 s sf1 entry — while the
-    kernel's per-window work is one `' '.join` + `hashlib.md5` over
-    the SAME token strings. Byte-identical output: ' '.join equals
+    window) for every sliding window. Tokenization stays a Catalyst
+    expression (`tokens`; Java regex/lowercase semantics untouched);
+    windows are joined and hashed in one mapInArrow kernel whose
+    per-window work is one `' '.join` + `hashlib.md5` over the token
+    strings (the Catalyst form evaluates an interpreted lambda per
+    window — O(n·k) copies per doc, 4.5 s of the 7.1 s sf1 entry). It
+    is byte-identical to
+    `md5(array_join(slice(tokens, i+1, k), ' '))`: ' '.join equals
     array_join(…, ' ') on non-null tokens (tokens() filters empties),
     UTF-8 encoding matches UTF8String bytes, and hexdigest matches
     F.md5's lowercase hex — so the persisted span-index format
     (`write_span_index`) and every flag comparison are unchanged.
-    Window text still never leaves the scan: only (id, n, pos,
-    32-char hash) rows cross. Non-long id columns keep the
-    all-Catalyst form so the output schema never changes.
+    Window text never leaves the scan: only (id, n, pos, 32-char
+    hash) rows cross. The id column passes through the kernel as its
+    own Arrow array (`take` by source row), so it keeps its Spark type
+    whatever that is. Docs with a NULL text or fewer than k tokens
+    yield no windows.
 
     The input is repartitioned before the window fold (same lesson
     as `minhash_signatures`): the per-window work is CPU-bound and a
@@ -1055,23 +1058,8 @@ def _window_hashes(
     identical 2.3M-row output. At 100 TB scan parallelism makes the
     exchange redundant-but-harmless relative to the fold."""
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    df = df.repartition(n_part, F.col(id_col))
-    if dict(df.dtypes).get(id_col) != "bigint":
-        toks = df.select(id_col, tokens(text_col).alias("_toks"))
-        return toks.where(F.size("_toks") >= k).select(
-            id_col,
-            F.size("_toks").alias("_n_tokens"),
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("_toks") - k),
-                    lambda i: F.md5(
-                        F.array_join(F.slice(F.col("_toks"), i + 1, k), " ")
-                    ),
-                )
-            ).alias("pos", "_wk"),
-        )
-    toks = df.select(
-        F.col(id_col).cast("long").alias("_id"), tokens(text_col).alias("_toks")
+    toks = df.repartition(n_part, F.col(id_col)).select(
+        id_col, tokens(text_col).alias("_toks")
     )
 
     def gen(batches):
@@ -1079,47 +1067,39 @@ def _window_hashes(
 
         import pyarrow as pa  # noqa: PLC0415
 
-        schema = pa.schema(
-            [
-                pa.field("_id", pa.int64()),
-                pa.field("_n_tokens", pa.int32()),
-                pa.field("pos", pa.int32()),
-                pa.field("_wk", pa.string()),
-            ]
-        )
         md5 = hashlib.md5
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            tkss = batch.column(1).to_pylist()
-            o_id, o_n, o_pos, o_wk = [], [], [], []
-            for did, tks in zip(ids, tkss):
-                if tks is None:
-                    continue
-                n = len(tks)
-                if n < k:
-                    continue
+            o_row, o_n, o_pos, o_wk = [], [], [], []
+            for row, tks in enumerate(batch.column(1).to_pylist()):
+                n = len(tks) if tks is not None else 0
                 for p in range(n - k + 1):
-                    o_id.append(did)
+                    o_row.append(row)
                     o_n.append(n)
                     o_pos.append(p)
                     o_wk.append(
                         md5(" ".join(tks[p : p + k]).encode("utf-8")).hexdigest()
                     )
-            if o_id:
-                yield pa.record_batch(
+            if o_row:
+                yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(o_id, type=pa.int64()),
+                        batch.column(0).take(pa.array(o_row, type=pa.int32())),
                         pa.array(o_n, type=pa.int32()),
                         pa.array(o_pos, type=pa.int32()),
                         pa.array(o_wk, type=pa.string()),
                     ],
-                    schema=schema,
+                    names=[id_col, "_n_tokens", "pos", "_wk"],
                 )
 
     return toks.mapInArrow(
-        gen, "_id long, _n_tokens int, pos int, _wk string"
-    ).select(
-        F.col("_id").alias(id_col), "_n_tokens", "pos", "_wk"
+        gen,
+        StructType(
+            [
+                toks.schema[id_col],
+                StructField("_n_tokens", IntegerType()),
+                StructField("pos", IntegerType()),
+                StructField("_wk", StringType()),
+            ]
+        ),
     )
 
 

@@ -36,6 +36,9 @@ from lottery_end_to_end_etl_data_pipeline_spark.schemas import (
     PREMIOS_COLUMNS,
     SORTEOS_COLUMNS,
 )
+from lottery_end_to_end_etl_data_pipeline_spark.sources.writers import (
+    write_parquet_partitioned,
+)
 
 
 def conform_premios(premios_raw: DataFrame) -> DataFrame:
@@ -131,19 +134,17 @@ def write_silver(
     re-runs only rewrite the partitions present in the batch, even
     under a foreign SparkSession whose `partitionOverwriteMode` is
     left at the static default (which would wipe the whole table)."""
-    (
-        sorteos.select(*SORTEOS_COLUMNS, "year", "sorteo")
-        .write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year", "sorteo")
-        .parquet(f"{silver_path}/sorteos")
+    write_parquet_partitioned(
+        sorteos.select(*SORTEOS_COLUMNS, "year", "sorteo"),
+        f"{silver_path}/sorteos",
+        ["year", "sorteo"],
+        mode,
     )
-    (
-        premios.select(*PREMIOS_COLUMNS, "year", "sorteo")
-        .write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year", "sorteo")
-        .parquet(f"{silver_path}/premios")
+    write_parquet_partitioned(
+        premios.select(*PREMIOS_COLUMNS, "year", "sorteo"),
+        f"{silver_path}/premios",
+        ["year", "sorteo"],
+        mode,
     )
     if simple_path:
         sorteos.select(*SORTEOS_COLUMNS).write.mode(mode).parquet(f"{simple_path}/sorteos")

@@ -9,8 +9,13 @@
 - ivf_assign  : coarse IVF-style partition assignment given centroid
                 vectors (for bucketed pair generation / search).
 
-All vector math is JVM higher-order functions (zip_with/aggregate)
-over the native array column — no UDF, no collect of the corpus.
+- knn_join    : bulk exact kNN, every query row against the corpus,
+                scored by one mapInArrow kernel (the queries are
+                collected; the corpus never is).
+
+The rest of the vector math is JVM higher-order functions
+(zip_with/aggregate) over the native array column — no UDF, no
+collect of the corpus.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def _dot_lit(vec_col: str, qvec: list[float]) -> Column:
@@ -194,6 +200,93 @@ def cosine_cols(a_col: Column, b_col: Column) -> Column:
     return dot / (norm(a_col) * norm(b_col))
 
 
+# Cap on the (corpus row, query) pairs knn_join's kernel scores and
+# yields per Arrow batch: the dot matrix and every output column stay
+# O(_KNN_PAIRS_PER_BATCH) however many queries there are.
+_KNN_PAIRS_PER_BATCH = 1 << 20
+
+
+def _knn_kernel(qids, qvecs):
+    """knn_join's mapInArrow scorer: (cid, vector) batches in,
+    (cid, qid, raw cosine) batches out, against the Arrow arrays of
+    query ids `qids` and query vectors `qvecs`. Self-contained (the
+    helpers are closures) so it pickles to Python workers that cannot
+    import this package."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+
+    def vectors(arr):
+        """{dim: (row indices, (rows, dim) float64 matrix, norms)} for
+        the well-formed rows of an Arrow list array; NULL lists and
+        lists with a NULL element are left out, so they score NULL."""
+        lens = arr.value_lengths().fill_null(-1).to_numpy(zero_copy_only=False)
+        starts = np.concatenate(([0], np.cumsum(np.maximum(lens, 0))[:-1]))
+        flat = arr.flatten()  # honours the slice offset, skips NULL lists
+        vals = flat.cast(pa.float64()).fill_null(0.0).to_numpy(zero_copy_only=False)
+        elem_null = flat.is_null().to_numpy(zero_copy_only=False)
+        out = {}
+        for dim in np.unique(lens[lens >= 0]):
+            rows = np.flatnonzero(lens == dim)
+            pos = starts[rows][:, None] + np.arange(dim)
+            keep = ~elem_null[pos].any(axis=1)
+            rows, mat = rows[keep], vals[pos[keep]]
+            acc = np.zeros(len(rows), dtype=np.float64)
+            for d in range(dim):  # the norm fold, d ascending
+                acc += mat[:, d] * mat[:, d]
+            out[int(dim)] = (rows, mat, np.sqrt(acc))
+        return out
+
+    nq = len(qids)
+    by_dim = vectors(qvecs)
+    q_step = max(1, min(nq, _KNN_PAIRS_PER_BATCH))
+    r_step = max(1, _KNN_PAIRS_PER_BATCH // q_step)
+
+    def score(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0 or nq == 0:
+                continue
+            cids = batch.column(0)
+            cvecs = vectors(batch.column(1))
+            for r0 in range(0, n, r_step):
+                r1 = min(r0 + r_step, n)
+                for q0 in range(0, nq, q_step):
+                    q1 = min(q0 + q_step, nq)
+                    raw = np.zeros((r1 - r0, q1 - q0), dtype=np.float64)
+                    ok = np.zeros(raw.shape, dtype=bool)
+                    for dim, (crows, C, cn) in cvecs.items():
+                        if dim not in by_dim:
+                            continue
+                        qrows, Q, qn = by_dim[dim]
+                        ca, cb = np.searchsorted(crows, (r0, r1))
+                        qa, qb = np.searchsorted(qrows, (q0, q1))
+                        if ca == cb or qa == qb:
+                            continue
+                        Cs, Qs = C[ca:cb], Q[qa:qb]
+                        # per-dimension accumulation == the Catalyst
+                        # fold's per-element op order
+                        dots = np.zeros((cb - ca, qb - qa), dtype=np.float64)
+                        for d in range(dim):
+                            dots += np.multiply.outer(Cs[:, d], Qs[:, d])
+                        denom = np.multiply.outer(cn[ca:cb], qn[qa:qb])
+                        with np.errstate(divide="ignore", invalid="ignore"):
+                            cos = dots / denom
+                        ix = np.ix_(crows[ca:cb] - r0, qrows[qa:qb] - q0)
+                        raw[ix] = cos
+                        ok[ix] = denom != 0
+                    nr, nc = raw.shape
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            cids.take(np.repeat(np.arange(r0, r1), nc)),
+                            qids.take(np.tile(np.arange(q0, q1), nr)),
+                            pa.array(raw.ravel(), mask=~ok.ravel()),
+                        ],
+                        names=["cid", "qid", "_rawcos"],
+                    )
+
+    return score
+
+
 def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -203,163 +296,57 @@ def knn_join(
     q_vec: str = "embedding",
     c_vec: str = "embedding",
     exclude_same_id: bool = False,
-    arrow_scoring: bool = False,
 ) -> DataFrame:
     """Bulk exact kNN — the retrieval-eval shape: for EVERY query row,
     the top-k corpus rows by cosine, in one pass.
 
-    Plan: the query table broadcasts (queries ≪ corpus by
-    assumption), every corpus partition scores its rows against all
-    queries locally (one corpus scan, no shuffle to score), then a
-    per-query window row_number on (ROUNDED cosine desc, corpus id)
-    takes the deterministic top-k — the only shuffle is the window's,
-    over the scored pairs. Each side's L2 norm is computed ONCE per
-    ROW before the join (an O(n+m) map) rather than per PAIR inside
-    the cosine: higher-order array functions evaluate interpreted,
-    so folding three array traversals per pair down to one (the dot)
-    cuts the scoring stage ~2-3x — same rounded scores, since
-    dot/(|c|·|q|) is insensitive to when the norms are taken. At
-    100 TB don't brute-force: pre-restrict the corpus per query
-    batch with the persisted index probes (`knn_ivf` /
-    `knn_lsh_indexed`) and feed the union of probed cells here; this
-    operator is the exact scorer + ranker either way.
+    Plan: the query set is collected to the driver — the ONE Spark
+    job this function runs at construction — and shipped inside a
+    mapInArrow NumPy kernel; every corpus partition scores its rows
+    against all queries locally (one corpus scan, no join, no shuffle
+    to score), then a per-query window row_number on (ROUNDED cosine
+    desc, corpus id) takes the deterministic top-k — the only shuffle
+    is the window's, over the scored pairs. Queries are assumed
+    driver-small. At 100 TB don't brute-force: pre-restrict the
+    corpus per query batch with the persisted index probes
+    (`knn_ivf` / `knn_lsh_indexed`) and feed the union of probed
+    cells here; this operator is the exact scorer + ranker either way.
 
-    ``arrow_scoring=True`` (r13, guide §4.2) swaps the interpreted
-    per-pair HOF dot for a mapInArrow NumPy kernel that is
-    BIT-IDENTICAL to the Catalyst fold: the queries (assumed
-    broadcast-small, same contract as the default path) are collected
-    to the driver, and the kernel accumulates per DIMENSION —
-    ``acc += C[:, d] * q[d]`` — so every element sees exactly the
-    fold's operation sequence (multiply then add, left to right, in
-    IEEE float64; no BLAS, no pairwise summation, no FMA), norms use
-    the same per-dimension trick with Math.sqrt-equivalent np.sqrt,
-    and the HALF_UP round(…, 4) stays in Spark on the kernel's raw
-    doubles. Same rounded scores, same deterministic ranking; ~8x
-    on a 50-query x 100k-corpus scoring stage at sf1. Opt-in because
-    collecting queries is a plan-construction job and the kernel
-    requires non-null fixed-dim vectors — bounded few-hundred-row
-    corpora keep the default Catalyst path."""
-    if arrow_scoring:
-        return _knn_join_arrow(
-            queries, corpus, k, q_id, c_id, q_vec, c_vec, exclude_same_id
-        )
-    q = queries.select(
-        F.col(q_id).alias("qid"),
-        F.col(q_vec).alias("_qv"),
-        _norm(q_vec).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(c_id).alias("cid"),
-        F.col(c_vec).alias("_cv"),
-        _norm(c_vec).alias("_cn"),
-    )
-    scored = c.crossJoin(F.broadcast(q))
-    if exclude_same_id:
-        scored = scored.filter(F.col("qid") != F.col("cid"))
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("_cv"), F.col("_qv"), lambda x, y: x.cast("double") * y.cast("double")
+    The kernel is bit-identical to the Catalyst fold
+    ``aggregate(zip_with(c, q, x*y), 0.0, acc+v) / (|c|·|q|)`` with
+    elements cast to double: it accumulates per DIMENSION —
+    ``acc += C[:, d] * q[d]`` — so every pair sees the fold's exact
+    operation sequence (multiply then add, d ascending, IEEE float64;
+    no BLAS, no pairwise summation, no FMA), norms use the same
+    per-dimension fold and np.sqrt, and the HALF_UP round(…, 4) stays
+    in Spark on the kernel's raw doubles.
+
+    NULL rule (``try_divide`` semantics): the cosine is NULL when
+    either vector is NULL, holds a NULL element, or the two differ in
+    length, and when the norm product is 0 (a zero vector). Under ANSI
+    mode a plain Catalyst division would raise DIVIDE_BY_ZERO there
+    instead. NULL ranks after every number (``desc`` puts nulls last);
+    NaN elements give a NaN cosine, which Spark orders above every
+    number. ``qid`` and ``cid`` keep the Spark types of ``q_id`` and
+    ``c_id``. Each yielded batch holds at most `_KNN_PAIRS_PER_BATCH`
+    pairs, so a whole-corpus query set never materializes a
+    corpus-batch x all-queries matrix."""
+    q = queries.select(F.col(q_id).alias("qid"), F.col(q_vec).alias("_qv"))
+    q_tbl = q.toArrow()
+    c = corpus.select(F.col(c_id).alias("cid"), F.col(c_vec).alias("_cv"))
+    scored = c.mapInArrow(
+        _knn_kernel(
+            q_tbl.column("qid").combine_chunks(),
+            q_tbl.column("_qv").combine_chunks(),
         ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = scored.withColumn(
-        "cosine", F.round(dot / (F.col("_cn") * F.col("_qn")), 4)
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "cosine", "rnk")
-    )
-
-
-def _knn_join_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str,
-    c_id: str,
-    q_vec: str,
-    c_vec: str,
-    exclude_same_id: bool,
-) -> DataFrame:
-    """The mapInArrow scoring kernel behind knn_join(arrow_scoring=
-    True). See knn_join's docstring for the bit-identity argument;
-    everything order-sensitive (per-dimension accumulation, separate
-    multiply/add, norms-before-division) mirrors the Catalyst fold."""
-    q_rows = queries.select(q_id, q_vec).collect()
-    qids = [r[0] for r in q_rows]
-    qmat = [[float(x) for x in r[1]] for r in q_rows]
-    # query norms on the driver: plain-Python floats ARE IEEE doubles,
-    # and the sequential loop reproduces _norm's fold exactly
-    qnorms = []
-    for vec in qmat:
-        acc = 0.0
-        for x in vec:
-            acc = acc + x * x
-        qnorms.append(math.sqrt(acc))
-
-    def score(batches):
-        import numpy as np  # noqa: PLC0415
-        import pyarrow as pa  # noqa: PLC0415
-
-        qarr = np.asarray(qmat, dtype=np.float64)  # (nq, dim)
-        qn = np.asarray(qnorms, dtype=np.float64)
-        qid_arr = np.asarray(qids, dtype=np.int64)
-        nq = len(qids)
-        out_schema = pa.schema(
+        StructType(
             [
-                pa.field("cid", pa.int64()),
-                pa.field("qid", pa.int64()),
-                pa.field("_rawcos", pa.float64()),
+                StructField("cid", c.schema["cid"].dataType),
+                StructField("qid", q.schema["qid"].dataType),
+                StructField("_rawcos", DoubleType()),
             ]
-        )
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            cid_np = batch.column(0).to_numpy(zero_copy_only=False).astype(
-                "int64"
-            )
-            emb = batch.column(1)
-            if isinstance(emb, pa.ChunkedArray):  # pragma: no cover
-                emb = emb.combine_chunks()
-            offs = np.diff(emb.offsets.to_numpy(zero_copy_only=False))
-            dim = qarr.shape[1]
-            if not (offs == dim).all():
-                raise ValueError(
-                    "knn_join arrow kernel requires fixed-dim non-null "
-                    f"vectors of dim {dim}"
-                )
-            flat = emb.values.to_numpy(zero_copy_only=False).astype(
-                np.float64
-            )
-            C = flat.reshape(n, dim)
-            # per-dimension accumulation == the Catalyst fold's exact
-            # per-element op order (multiply, then add, d ascending)
-            dots = np.zeros((n, nq), dtype=np.float64)
-            cacc = np.zeros(n, dtype=np.float64)
-            for d in range(dim):
-                col = C[:, d]
-                dots += np.multiply.outer(col, qarr[:, d])
-                cacc += col * col
-            cn = np.sqrt(cacc)
-            denom = np.multiply.outer(cn, qn)  # _cn * _qn, then divide
-            with np.errstate(divide="ignore", invalid="ignore"):
-                raw = dots / denom
-            yield pa.record_batch(
-                [
-                    pa.array(np.repeat(cid_np, nq), type=pa.int64()),
-                    pa.array(np.tile(qid_arr, n), type=pa.int64()),
-                    pa.array(raw.ravel(), type=pa.float64()),
-                ],
-                schema=out_schema,
-            )
-
-    scored = corpus.select(
-        F.col(c_id).cast("long").alias("cid"), F.col(c_vec).alias("_cv")
-    ).mapInArrow(score, "cid long, qid long, _rawcos double")
+        ),
+    )
     if exclude_same_id:
         scored = scored.filter(F.col("qid") != F.col("cid"))
     scored = scored.withColumn("cosine", F.round(F.col("_rawcos"), 4))
@@ -877,8 +864,8 @@ def knn_label_agreement(
     agreement < 0.5. Low-purity rows are the candidates for label
     noise review in a curated training set.
 
-    Plan: `knn_join` does the scoring (broadcast queries, one corpus
-    scan, deterministic (round(cos,4) desc, id) ranking), labels
+    Plan: `knn_join` does the scoring (queries collected into its
+    kernel, one corpus scan, deterministic (round(cos,4) desc, id) ranking), labels
     attach via one broadcast join on the query side and one hash join
     on the neighbor side, then two bounded aggregates. At 100 TB the
     query batch comes from a sampled audit set and the corpus side is
@@ -898,10 +885,6 @@ def knn_label_agreement(
         q_vec="_qv",
         c_vec=vec_col,
         exclude_same_id=True,
-        # full-corpus scoring: the Arrow kernel (bit-identical fold,
-        # see knn_join) replaces ~n_queries interpreted HOF dots per
-        # corpus row — r13, guide §4.2
-        arrow_scoring=True,
     )
     clab = df.select(F.col(id_col).alias("cid"), F.col(label_col).alias("_cl"))
     qlab = q.select(F.col("q_id").alias("qid"), "_ql")
@@ -938,7 +921,8 @@ def hard_negatives(
     contrastive batches informative (vs random negatives that are
     trivially far).
 
-    Same plan as `knn_join` (broadcast queries, one corpus scan, one
+    The plan shape of `knn_join` (queries broadcast to the corpus
+    scan — here a Catalyst cosine over a broadcast crossJoin — one
     window shuffle, deterministic (round(cos,4) desc, id) ranking)
     with the label-mismatch predicate applied before ranking so the
     top-k is taken over negatives only. At 100 TB pre-restrict the
@@ -1016,46 +1000,31 @@ def dim_truncation_recall(
     scan-bytes cut IF recall holds; this operator tells you whether
     it does on YOUR corpus).
 
-    One broadcast-scan scores both rankings in a single pass
-    (slice() is a narrow projection, the corpus is read once); two
-    windows rank them; a left join counts survivors so zero-overlap
-    queries still report 0."""
-    q = df.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("_qv")
-    )
-    c = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("_cv"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos_full", F.round(cosine_cols(F.col("_cv"), F.col("_qv")), 4)
+    Both rankings come from `knn_join` — one over the full vectors,
+    one over their `slice`d `trunc_dim` prefixes — so each is one
+    corpus scan through the shared exact kernel (same rounded cosine,
+    same (cosine desc, id) cut, same NULL rule), and a left join
+    counts the truncated top-k's survivors so zero-overlap queries
+    still report 0. The query rows are collected twice at
+    construction, once per `knn_join`."""
+
+    def ranked(vec: Column) -> DataFrame:
+        corpus = df.select(id_col, vec.alias("_v"))
+        queries = corpus.filter(F.col(id_col) < n_queries).withColumnRenamed(
+            id_col, "q_id"
         )
-        .withColumn(
-            "cos_trunc",
-            F.round(
-                cosine_cols(
-                    F.slice("_cv", 1, trunc_dim), F.slice("_qv", 1, trunc_dim)
-                ),
-                4,
-            ),
+        return knn_join(
+            queries, corpus, k=k, c_id=id_col, q_vec="_v", c_vec="_v",
+            exclude_same_id=True,
         )
-        .select("qid", "cid", "cos_full", "cos_trunc")
-    )
-    wf = Window.partitionBy("qid").orderBy(F.desc("cos_full"), F.asc("cid"))
-    wt = Window.partitionBy("qid").orderBy(F.desc("cos_trunc"), F.asc("cid"))
-    top_f = (
-        scored.withColumn("rnk", F.row_number().over(wf))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid")
-    )
-    top_t = (
-        scored.withColumn("rnk", F.row_number().over(wt))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("qid").alias("_tqid"), F.col("cid").alias("_tcid"))
+
+    full = ranked(F.col(vec_col)).select("qid", "cid")
+    trunc = ranked(F.slice(vec_col, 1, trunc_dim)).select(
+        F.col("qid").alias("_tqid"), F.col("cid").alias("_tcid")
     )
     return (
-        top_f.join(
-            top_t,
+        full.join(
+            trunc,
             (F.col("qid") == F.col("_tqid")) & (F.col("cid") == F.col("_tcid")),
             "left",
         )

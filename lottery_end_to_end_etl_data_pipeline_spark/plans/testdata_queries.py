@@ -1584,8 +1584,8 @@ def knn_lsh_cosine(spark, sf_dir):
 def knn_join_topk(spark, sf_dir):
     """Bulk exact kNN (operators/similarity.py::knn_join): every query
     vector gets its top-3 corpus neighbors in ONE corpus scan —
-    queries broadcast, scoring is scan-local, the only shuffle is the
-    per-query window over scored pairs. Ranks on the ROUNDED cosine
+    queries ride in the scoring kernel, scoring is scan-local, the
+    only shuffle is the per-query window over scored pairs. Ranks on the ROUNDED cosine
     with the corpus id as tie-break, so the cut line is deterministic
     across engines (the repo's float-determinism discipline)."""
     from lottery_end_to_end_etl_data_pipeline_spark.operators.similarity import knn_join
@@ -1594,9 +1594,7 @@ def knn_join_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    # full-corpus scoring side -> Arrow kernel (bit-identical fold,
-    # r13; see knn_join docstring)
-    out = knn_join(queries, emb, k=3, exclude_same_id=True, arrow_scoring=True)
+    out = knn_join(queries, emb, k=3, exclude_same_id=True)
     return out.withColumn("rnk", F.col("rnk").cast("int"))
 
 
@@ -1752,7 +1750,7 @@ _KNN_PAGERANK_ORACLE = (
 def knn_graph_centrality(spark, sf_dir):
     """Corpus-representativeness by PageRank over the kNN similarity
     graph (operators/graph.py): each embedding's top-3 cosine
-    neighbors become directed edges (knn_join — queries broadcast,
+    neighbors become directed edges (knn_join — queries collected,
     one corpus scan), then 8 power iterations rank centrality. The
     curation read: high-rank docs are cluster cores (keep for
     representativeness), the low-rank tail is outliers (inspect).
@@ -4769,6 +4767,29 @@ _DRIVER_WINDOW_PRIORITY = [
     #     queue head the r12 comment promised, registry order by
     #     (last_green_round, registry_position) from
     #     CORRECTNESS_r01..r12.
+    # tier 1 head: entries whose operator moved to the single exact-kNN
+    # kernel (knn_join callers, dim_truncation_recall, the kNN graph
+    # entries) or the single window-hash kernel (_window_hashes), plus
+    # the cosine-fold sibling hard_negative_mining. The list is longer
+    # than the 50-entry window: the names past position 50 keep their
+    # queue place for the next rotation.
+    "knn_join_topk",
+    "knn_label_agreement",
+    "dim_truncation_recall",
+    "ndcg_truncation_audit",
+    "knn_graph_centrality",
+    "bfs_blast_radius",
+    "clustering_coefficient_knn",
+    "facility_location_coreset",
+    "hits_authority_knn",
+    "kcore_mutual_knn",
+    "knn_reciprocity",
+    "label_propagation_knn",
+    "personalized_pagerank_knn",
+    "triangle_count_knn",
+    "repeated_span_stats",
+    "repeated_span_incremental",
+    "hard_negative_mining",
     # tier 1: implementation changed in r13
     "streaming_session_stats",
     "streaming_zscore_alerts",
@@ -4783,12 +4804,7 @@ _DRIVER_WINDOW_PRIORITY = [
     "knn_ivf_cosine",
     "semdedup_incremental_index",
     "knn_pq_cluster_recall",
-    "knn_label_agreement",
-    "knn_join_topk",
-    "ndcg_truncation_audit",
     "frequent_item_pairs",
-    "repeated_span_stats",
-    "repeated_span_incremental",
     "chunk_dedup_stats",
     "cross_source_contamination",
     "scrape_extract_roundtrip",
@@ -12121,7 +12137,7 @@ def ndcg_truncation_audit(spark, sf_dir):
     companion to `dim_truncation_recall` (recall@k says whether the
     right docs appear; nDCG says whether they appear in the right
     ORDER, gain = 11 - full_rank). Both rankings come from
-    `knn_join` (broadcast query set, ONE corpus scan each, window
+    `knn_join` (collected query set, ONE corpus scan each, window
     top-k per query); the eval is over a deterministic sampled query
     set (vec_id % 50 = 0), so pair space is |Q|x|corpus| by design —
     an eval harness, not a production all-pairs join. Determinism:
@@ -12135,13 +12151,13 @@ def ndcg_truncation_audit(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    full = knn_join(queries, emb, k=10, exclude_same_id=True, arrow_scoring=True)
+    full = knn_join(queries, emb, k=10, exclude_same_id=True)
     rel = full.select(
         "qid", "cid", (F.lit(11) - F.col("rnk")).cast("double").alias("rel")
     )
     emb16 = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
     q16 = queries.select("q_id", F.slice("embedding", 1, 16).alias("embedding"))
-    trunc = knn_join(q16, emb16, k=10, exclude_same_id=True, arrow_scoring=True)
+    trunc = knn_join(q16, emb16, k=10, exclude_same_id=True)
     per_q = (
         trunc.join(rel, ["qid", "cid"], "left")
         .fillna(0.0, subset=["rel"])

@@ -23,6 +23,43 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _cgroup_memory_limit(proc_cgroup: str, fs_root: str = "/") -> int | None:
+    """Tightest memory limit in bytes on this process's cgroup and its
+    ancestors, or None when none is set. `proc_cgroup` is the text of
+    /proc/self/cgroup: the v2 line ``0::<path>`` maps to
+    ``sys/fs/cgroup/<path>/memory.max``, a v1 ``N:...memory...:<path>``
+    line to ``sys/fs/cgroup/memory/<path>/memory.limit_in_bytes``,
+    both under `fs_root`. Every directory from the cgroup up to the
+    mount root is read, so a cap set on a parent still counts. v2's
+    "max" is skipped; v1's huge no-limit sentinel loses to any real
+    cap here and to physical RAM in the caller."""
+    dirs = []
+    for line in proc_cgroup.splitlines():
+        parts = line.split(":", 2)
+        if len(parts) != 3:
+            continue
+        _, controllers, path = parts
+        if controllers == "":
+            dirs.append(("sys/fs/cgroup", "memory.max", path))
+        elif "memory" in controllers.split(","):
+            dirs.append(("sys/fs/cgroup/memory", "memory.limit_in_bytes", path))
+    limits = []
+    for mount, name, path in dirs:
+        rel = path.strip("/")
+        while True:
+            try:
+                with open(os.path.join(fs_root, mount, rel, name)) as f:
+                    raw = f.read().strip()
+            except OSError:
+                raw = ""
+            if raw.isdigit():
+                limits.append(int(raw))
+            if not rel:
+                break
+            rel = os.path.dirname(rel)
+    return min(limits, default=None)
+
+
 def get_session(
     app_name: str = "lottery-spark-engine",
     master: str | None = None,
@@ -61,22 +98,17 @@ def get_session(
         except (ValueError, OSError, AttributeError):
             total_bytes = 40 * 1024**3  # unknown platform: the historical 8g
         # In a container, physical RAM overstates what the JVM may
-        # use (r12 ADVICE, medium): a memory-capped cgroup below
-        # ~RAM/5 would let -Xmx exceed the cap and get the JVM
-        # OOM-killed. Take min(cgroup limit, physical RAM); cgroup v2
-        # writes "max" (no limit) as text, v1 encodes it as a huge
-        # number that the min() ignores naturally.
-        for limit_file in (
-            "/sys/fs/cgroup/memory.max",  # v2
-            "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # v1
-        ):
-            try:
-                raw = open(limit_file).read().strip()
-                if raw.isdigit():
-                    total_bytes = min(total_bytes, int(raw))
-                break
-            except OSError:
-                continue
+        # use: a memory-capped cgroup below ~RAM/5 would let -Xmx
+        # exceed the cap and get the JVM OOM-killed. Take
+        # min(cgroup limit, physical RAM).
+        try:
+            with open("/proc/self/cgroup") as f:
+                proc_cgroup = f.read()
+        except OSError:
+            proc_cgroup = ""
+        limit = _cgroup_memory_limit(proc_cgroup)
+        if limit is not None:
+            total_bytes = min(total_bytes, limit)
         total_gib = total_bytes / (1024**3)
         driver_mem = f"{max(4, min(24, int(total_gib // 5)))}g"
 

@@ -31,25 +31,6 @@ def write_parquet_partitioned(
     )
 
 
-def write_parquet_flat(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Flat parquet sink (S5 — the reference's 'simple bucket')."""
-    df.write.mode(mode).parquet(path)
-
-
-def save_as_table(
-    df: DataFrame,
-    table: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """CTAS + catalog registration in one step (S7) — subsumes the
-    reference's CTAS + crawler + purge trio."""
-    writer = df.write.mode(mode).format("parquet")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.saveAsTable(table)
-
-
 def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
     """CSV sink (S10)."""
     df.write.mode(mode).option("header", str(header).lower()).csv(path)

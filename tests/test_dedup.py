@@ -388,25 +388,67 @@ def test_repeated_span_merges_adjacent_windows(spark):
     """Sliding k=3 windows: a shared 5-token prefix yields exactly one
     maximal span of 5 tokens (3 overlapping flagged windows merged);
     an internal 4-token repeat inside one doc yields two spans; a doc
-    with no repeated window is absent from the output."""
+    with no repeated window is absent from the output. Same answer,
+    and the same id type, for bigint and string doc ids."""
     from lottery_end_to_end_etl_data_pipeline_spark.operators.dedup import repeated_span_stats
 
-    rows = [
-        (0, "a b c d e x1 x2 x3 x4"),
-        (1, "a b c d e y1 y2 y3 y4"),
-        (2, "p q r s p q r s"),
-        (3, "totally unique tokens only here"),
+    texts = [
+        "a b c d e x1 x2 x3 x4",
+        "a b c d e y1 y2 y3 y4",
+        "p q r s p q r s",
+        "totally unique tokens only here",
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in repeated_span_stats(df, "text", "doc_id", 3).collect()}
-    for d in (0, 1):
-        assert out[d]["n_spans"] == 1
-        assert out[d]["repeated_tokens"] == 5
-        assert out[d]["repeated_frac"] == round(5 / 9, 4)
-    assert out[2]["n_spans"] == 2
-    assert out[2]["repeated_tokens"] == 8
-    assert out[2]["repeated_frac"] == 1.0
-    assert 3 not in out
+    for id_type, ids in (("bigint", [0, 1, 2, 3]), ("string", ["d0", "d1", "d2", "d3"])):
+        df = spark.createDataFrame(
+            list(zip(ids, texts)), f"doc_id {id_type}, text string"
+        )
+        res = repeated_span_stats(df, "text", "doc_id", 3)
+        assert dict(res.dtypes)["doc_id"] == id_type
+        out = {r["doc_id"]: r for r in res.collect()}
+        for d in ids[:2]:
+            assert out[d]["n_spans"] == 1
+            assert out[d]["repeated_tokens"] == 5
+            assert out[d]["repeated_frac"] == round(5 / 9, 4)
+        assert out[ids[2]]["n_spans"] == 2
+        assert out[ids[2]]["repeated_tokens"] == 8
+        assert out[ids[2]]["repeated_frac"] == 1.0
+        assert ids[3] not in out
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_window_hashes_match_catalyst_md5(spark, id_type):
+    """The window-hash kernel emits exactly the rows of the Catalyst
+    form md5(array_join(slice(tokens, i+1, k), ' ')) — non-ASCII
+    tokens included — and skips NULL texts and docs shorter than k."""
+    from lottery_end_to_end_etl_data_pipeline_spark.operators.dedup import _window_hashes
+    from lottery_end_to_end_etl_data_pipeline_spark.operators.text import tokens
+
+    texts = [
+        "Ñandú café straße 日本語 テキスト  naïve   façade émigré",
+        "Crème BRÛLÉE ça va ÆØÅ ñandú café straße",
+        "too short",
+        None,
+        "plain ascii words repeat plain ascii words repeat",
+    ]
+    ids = list(range(len(texts))) if id_type == "bigint" else [f"doc-{i}" for i in range(len(texts))]
+    df = spark.createDataFrame(list(zip(ids, texts)), f"doc_id {id_type}, text string")
+    k = 3
+    got = _window_hashes(df, "text", "doc_id", k)
+    toks = df.select("doc_id", tokens("text").alias("_toks")).where(F.size("_toks") >= k)
+    want = toks.select(
+        "doc_id",
+        F.size("_toks").alias("_n_tokens"),
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.size("_toks") - k),
+                lambda i: F.md5(F.array_join(F.slice("_toks", i + 1, k), " ")),
+            )
+        ).alias("pos", "_wk"),
+    )
+    assert got.dtypes == want.dtypes
+    got_rows = sorted(got.collect())
+    assert got_rows == sorted(want.collect())
+    assert len(got_rows) == 6 + 6 + 6
 
 
 def test_repeated_span_incremental_probes_index(spark, tmp_path):

@@ -3,6 +3,7 @@
 import math
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from lottery_end_to_end_etl_data_pipeline_spark.operators.similarity import (
@@ -441,8 +442,9 @@ def test_knn_join_matches_knn_brute_per_query(spark, vectors):
 
 
 def test_knn_join_broadcasts_queries(spark, vectors):
-    """The query side must broadcast — a shuffle join here would
-    reshuffle the corpus per query batch."""
+    """The single-path plan: the queries ride inside the MapInArrow
+    scoring kernel (no join of any kind, so the corpus is never
+    shuffled to score) and one Window ranks the scored pairs."""
     import contextlib
     import io
 
@@ -454,9 +456,174 @@ def test_knn_join_broadcasts_queries(spark, vectors):
     with contextlib.redirect_stdout(buf):
         out.explain("simple")
     plan = buf.getvalue()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "MapInArrow" in plan
+    assert "Join" not in plan
     assert plan.count("Window [") == 1
+
+
+def _catalyst_knn(queries, corpus, k, exclude_same_id=False):
+    """Reference scorer: the all-Catalyst cosine fold knn_join's kernel
+    must reproduce, with try_divide so a zero norm product is NULL."""
+
+    def norm(c):
+        return F.sqrt(
+            F.aggregate(
+                F.transform(c, lambda x: x.cast("double") * x.cast("double")),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+        )
+
+    q = queries.select(F.col("q_id").alias("qid"), F.col("embedding").alias("_qv"))
+    c = corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("_cv"))
+    scored = c.crossJoin(q)
+    if exclude_same_id:
+        scored = scored.filter(F.col("qid") != F.col("cid"))
+    dot = F.aggregate(
+        F.zip_with("_cv", "_qv", lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    scored = scored.withColumn(
+        "cosine",
+        F.round(F.try_divide(dot, norm(F.col("_cv")) * norm(F.col("_qv"))), 4),
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("qid", "cid", "cosine", "rnk")
+    )
+
+
+_DEGENERATE_VECTORS = [
+    [1.0, 0.0, 0.0],
+    [0.0, 0.0, 0.0],  # zero norm
+    None,  # NULL vector
+    [1.0, 2.0],  # wrong dim
+    [0.5, None, 1.0],  # NULL element
+    [0.3, -0.2, 0.1],
+    [0.3, -0.2, 0.1],  # exact tie, broken by id
+    [-1.0, 0.5, 2.0],
+]
+
+
+@pytest.mark.parametrize(
+    "id_type,make_id",
+    [("bigint", lambda i: i), ("int", lambda i: i), ("string", lambda i: f"v{i}")],
+    ids=["bigint", "int", "string"],
+)
+@pytest.mark.parametrize("exclude_same_id", [False, True])
+def test_knn_join_degenerate_vectors_match_catalyst_fold(
+    spark, id_type, make_id, exclude_same_id
+):
+    """Zero-norm, NULL, NULL-element and wrong-dim vectors score a
+    NULL cosine that ranks after every number, exactly as the
+    try_divide Catalyst fold; ids keep their Spark type."""
+    from lottery_end_to_end_etl_data_pipeline_spark.operators.similarity import knn_join
+
+    corpus = spark.createDataFrame(
+        [(make_id(i), v) for i, v in enumerate(_DEGENERATE_VECTORS)],
+        f"vec_id {id_type}, embedding array<float>",
+    )
+    queries = corpus.select(F.col("vec_id").alias("q_id"), "embedding")
+    got = knn_join(queries, corpus, k=8, exclude_same_id=exclude_same_id)
+    want = _catalyst_knn(queries, corpus, k=8, exclude_same_id=exclude_same_id)
+    assert dict(got.dtypes)["qid"] == id_type
+    assert dict(got.dtypes)["cid"] == id_type
+    got_rows = sorted(got.collect(), key=lambda r: (r["qid"], r["rnk"]))
+    assert got_rows == sorted(want.collect(), key=lambda r: (r["qid"], r["rnk"]))
+    by_q = {}
+    for r in got_rows:
+        by_q.setdefault(r["qid"], []).append(r["cosine"])
+    assert set(by_q[make_id(1)]) == {None}
+    assert by_q[make_id(0)][:2] == ([0.8018] * 2 if exclude_same_id else [1.0, 0.8018])
+    for cosines in by_q.values():  # every number ranks before any NULL
+        n = sum(c is not None for c in cosines)
+        assert None not in cosines[:n]
+
+
+def test_knn_join_matches_catalyst_fold_on_random_vectors(spark):
+    """Bit-identical rounded scores and ranking on well-formed input."""
+    import random
+
+    from lottery_end_to_end_etl_data_pipeline_spark.operators.similarity import knn_join
+
+    rng = random.Random(11)
+    corpus = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(60)],
+        "vec_id bigint, embedding array<float>",
+    ).repartition(3)
+    queries = corpus.filter(F.col("vec_id") < 7).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    got = knn_join(queries, corpus, k=5, exclude_same_id=True).collect()
+    want = _catalyst_knn(queries, corpus, k=5, exclude_same_id=True).collect()
+    assert sorted(got) == sorted(want)
+    assert len(got) == 35
+
+
+def _kernel_rows(score, batches):
+    import pyarrow as pa
+
+    rows = pa.Table.from_batches(list(score(batches))).to_pylist()
+    return sorted(rows, key=lambda r: (r["cid"], r["qid"]))
+
+
+def test_knn_kernel_reads_sliced_record_batches():
+    """A sliced batch (list offsets not starting at 0) must score its
+    own rows, not the first rows of the shared child buffer."""
+    import pyarrow as pa
+
+    from lottery_end_to_end_etl_data_pipeline_spark.operators.similarity import (
+        _knn_kernel,
+    )
+
+    vecs = [[9.0, 9.0, 9.0], None, [1.0, 0.0, 0.0], [0.0, 0.0, 0.0],
+            [0.3, -0.2, 0.1], [1.0, 2.0]]
+    vtype = pa.list_(pa.float32())
+
+    def batch(rows):
+        return pa.RecordBatch.from_arrays(
+            [pa.array([i for i, _ in rows], pa.int64()),
+             pa.array([v for _, v in rows], vtype)],
+            names=["cid", "_cv"],
+        )
+
+    full = batch(list(enumerate(vecs)))
+    sliced = full.slice(2)
+    assert sliced.column(1).offsets[0].as_py() == 3
+    score = _knn_kernel(
+        pa.array([10, 11], pa.int64()),
+        pa.array([[1.0, 0.0, 0.0], [0.3, -0.2, 0.1]], vtype),
+    )
+    got = _kernel_rows(score, [sliced])
+    assert got == _kernel_rows(score, [batch(list(enumerate(vecs))[2:])])
+    cos = {(r["cid"], r["qid"]): r["_rawcos"] for r in got}
+    assert cos[(2, 10)] == 1.0
+    assert cos[(3, 10)] is None and cos[(5, 11)] is None
+
+
+def test_knn_kernel_caps_pairs_per_batch(monkeypatch):
+    """Whole-corpus query sets are scored in pair-capped blocks that
+    together equal the uncapped result."""
+    import pyarrow as pa
+
+    from lottery_end_to_end_etl_data_pipeline_spark.operators import similarity
+
+    vtype = pa.list_(pa.float64())
+    vecs = [[float(i), 1.0, float(i % 3)] for i in range(7)]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(7), pa.int64()), pa.array(vecs, vtype)],
+        names=["cid", "_cv"],
+    )
+    qids, qvecs = pa.array(range(7), pa.int64()), pa.array(vecs, vtype)
+    uncapped = _kernel_rows(similarity._knn_kernel(qids, qvecs), [batch])
+    monkeypatch.setattr(similarity, "_KNN_PAIRS_PER_BATCH", 4)
+    capped = similarity._knn_kernel(qids, qvecs)
+    assert max(b.num_rows for b in capped([batch])) <= 4
+    assert _kernel_rows(capped, [batch]) == uncapped
+    assert len(uncapped) == 49
 
 
 def test_repetition_features_exact_values(spark):
