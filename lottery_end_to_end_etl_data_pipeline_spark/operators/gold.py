@@ -19,10 +19,13 @@ partition pruning.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lottery_end_to_end_etl_data_pipeline_spark.functions.expressions import safe_pct, terminacion
+from lottery_end_to_end_etl_data_pipeline_spark.sources.writers import run_sinks
 
 #: gold table name → (builder, partition cols) — partitioning mirrors
 #: sql/gold (05/06/07 partitioned by year, sql/gold/05:24 etc.).
@@ -276,15 +279,24 @@ def build_all(
     spark: SparkSession | None = None,
 ) -> dict[str, DataFrame]:
     """Build all 7 gold tables; optionally persist them partitioned as
-    the reference does (overwrite = the purge-free idempotent re-run)."""
-    out: dict[str, DataFrame] = {}
-    for name, builder in GOLD_BUILDERS.items():
-        df = builder(premios, sorteos)
-        out[name] = df
-        if gold_path:
-            writer = df.write.mode("overwrite")
-            parts = GOLD_PARTITIONS[name]
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(f"{gold_path}/{name}")
+    the reference does (overwrite = the purge-free idempotent re-run).
+
+    The 7 writes are independent and run concurrently, one driver
+    thread per table (`writers.run_sinks`), like the reference's Step
+    Functions Map over its CTAS. A failing write is raised after the
+    others have finished."""
+    out = {name: builder(premios, sorteos) for name, builder in GOLD_BUILDERS.items()}
+    if gold_path:
+        run_sinks(
+            spark or premios.sparkSession,
+            [partial(_write_gold, df, f"{gold_path}/{name}", GOLD_PARTITIONS[name])
+             for name, df in out.items()],
+        )
     return out
+
+
+def _write_gold(df: DataFrame, path: str, parts: list[str]) -> None:
+    writer = df.write.mode("overwrite")
+    if parts:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(path)

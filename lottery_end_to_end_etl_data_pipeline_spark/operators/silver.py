@@ -14,7 +14,9 @@ Reference parity (`transformer.py:151-266`, SURVEY §1.2/§2.1):
   (transformer.py:244-248).
 - incremental guard (S4): the reference set-differences discovered
   draw ids against already-processed ones (s3_utils.py:46-58,
-  transformer.py:92-118) — here a left-anti join, fully distributed.
+  transformer.py:92-118) — here a file-level key filter on the
+  driver's listings before the parse, then a left-anti join, fully
+  distributed, on the parsed draw ids.
 
 Scale notes: `partitionBy("year", "sorteo")` gives automatic partition
 pruning downstream; dynamic partition overwrite keeps re-runs
@@ -22,6 +24,10 @@ idempotent without the reference's purge Lambda (SURVEY §4).
 """
 
 from __future__ import annotations
+
+import re
+from functools import partial
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +43,7 @@ from lottery_end_to_end_etl_data_pipeline_spark.schemas import (
     SORTEOS_COLUMNS,
 )
 from lottery_end_to_end_etl_data_pipeline_spark.sources.writers import (
+    run_sinks,
     write_parquet_partitioned,
 )
 
@@ -110,9 +117,39 @@ def with_partitions(sorteos: DataFrame, premios: DataFrame, strict: bool = True
     return s, p
 
 
+def unprocessed_files(raw_files: list[str], silver_sorteos: DataFrame | None) -> list[str]:
+    """S4 incremental guard at file level, before the parse: drop every
+    raw file whose path carries a `sorteo=<id>` key that already has a
+    silver `sorteos` partition — the reference's key listing set-
+    differenced against the processed draw numbers (s3_utils.py:46-58,
+    transformer.py:92-118).
+
+    Both sides are driver-side file listings (the raw read's and the
+    silver read's `inputFiles()`), so the guard runs no Spark job. Keys
+    compare as the integer the silver partition holds; a raw file with
+    no key, or a key that is not an integer, is never dropped —
+    `filter_unprocessed` after the parse still guarantees the draw ids.
+    """
+    if silver_sorteos is None:
+        return raw_files
+    seen = {_sorteo_key(f) for f in silver_sorteos.inputFiles()} - {None}
+    return [f for f in raw_files if _sorteo_key(f) not in seen]
+
+
+def _sorteo_key(uri: str) -> int | None:
+    """The integer value of the innermost `sorteo=` directory of a
+    listed file's URI, or None."""
+    dirs = unquote(urlparse(uri).path).split("/")[:-1]
+    keys = [d[len("sorteo="):] for d in dirs if d.startswith("sorteo=")]
+    return int(keys[-1]) if keys and re.fullmatch(r"-?[0-9]+", keys[-1]) else None
+
+
 def filter_unprocessed(discovered: DataFrame, silver_sorteos: DataFrame | None) -> DataFrame:
     """S4 incremental guard as a left-anti join (replaces
-    s3_utils.py:46-58's driver-side set difference)."""
+    s3_utils.py:46-58's driver-side set difference). It keeps the
+    draw-id guarantee behind `unprocessed_files`: it also drops draws
+    from raw files without a `sorteo=` key and from files whose header
+    disagrees with their path."""
     if silver_sorteos is None:
         return discovered
     seen = silver_sorteos.select(F.col("numero_sorteo").alias("_seen_id")).distinct()
@@ -133,22 +170,23 @@ def write_silver(
     Dynamic partition overwrite is set per-write so incremental
     re-runs only rewrite the partitions present in the batch, even
     under a foreign SparkSession whose `partitionOverwriteMode` is
-    left at the static default (which would wipe the whole table)."""
-    write_parquet_partitioned(
-        sorteos.select(*SORTEOS_COLUMNS, "year", "sorteo"),
-        f"{silver_path}/sorteos",
-        ["year", "sorteo"],
-        mode,
-    )
-    write_parquet_partitioned(
-        premios.select(*PREMIOS_COLUMNS, "year", "sorteo"),
-        f"{silver_path}/premios",
-        ["year", "sorteo"],
-        mode,
-    )
+    left at the static default (which would wipe the whole table).
+
+    The sinks (2 partitioned, plus 2 flat with `simple_path`) run
+    concurrently, one driver thread each (`writers.run_sinks`); a
+    failing sink is raised after the others have finished."""
+    tables = [(sorteos, "sorteos", SORTEOS_COLUMNS), (premios, "premios", PREMIOS_COLUMNS)]
+    sinks = [
+        partial(write_parquet_partitioned, df.select(*cols, "year", "sorteo"),
+                f"{silver_path}/{name}", ["year", "sorteo"], mode)
+        for df, name, cols in tables
+    ]
     if simple_path:
-        sorteos.select(*SORTEOS_COLUMNS).write.mode(mode).parquet(f"{simple_path}/sorteos")
-        premios.select(*PREMIOS_COLUMNS).write.mode(mode).parquet(f"{simple_path}/premios")
+        sinks += [
+            partial(df.select(*cols).write.mode(mode).parquet, f"{simple_path}/{name}")
+            for df, name, cols in tables
+        ]
+    run_sinks(sorteos.sparkSession, sinks)
 
 
 def register_silver(spark, silver_path: str) -> None:

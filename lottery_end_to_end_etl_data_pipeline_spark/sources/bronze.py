@@ -44,6 +44,9 @@ strict validations share one scan.
 
 from __future__ import annotations
 
+import re
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,6 +63,8 @@ RE_REINTEGROS = r"REINTEGROS ([\d, ]+)"
 RE_PRIZE_LINE = r"^(\d+)\s+(\w+)\s+\.+\s+([\d,]+\.?\d*)"
 
 _RAW_COLS = ("file", "content")
+# Hadoop glob metacharacters, escaped with a backslash to match literally
+_GLOB_CHARS = re.compile(r"[\\\[\]{}*?]")
 
 
 def read_raw_draws(spark: SparkSession, path: str | list[str]) -> DataFrame:
@@ -74,6 +79,19 @@ def read_raw_draws(spark: SparkSession, path: str | list[str]) -> DataFrame:
         spark.read.text(paths, wholetext=True)
         .select(F.input_file_name().alias("file"), F.col("value").alias("content"))
     )
+
+
+def read_raw_files(spark: SparkSession, files: list[str]) -> DataFrame:
+    """`read_raw_draws` over exactly the listed files, given as the URIs
+    `DataFrame.inputFiles()` returns. Each URI is decoded and its glob
+    characters escaped, so a listed name is never expanded as a
+    pattern; the `file` column keeps the listed URI. An empty list is an
+    empty local relation: nothing is scanned, and neither the parse over
+    it nor its strict check runs a Spark job."""
+    if not files:
+        none = F.lit(None).cast("string")
+        return spark.range(1).select(none.alias("file"), none.alias("content")).where(F.lit(False))
+    return read_raw_draws(spark, [_GLOB_CHARS.sub(r"\\\g<0>", unquote(f)) for f in files])
 
 
 _PREMIO_ARR_T = (

@@ -5,11 +5,38 @@ Overwrite semantics replace the reference's entire purge-Lambda dance
 rewrites only the partitions present in the incoming data, and
 `saveAsTable`/`CREATE OR REPLACE` keep the catalog in sync without
 crawlers.
+
+Independent sinks run concurrently (`run_sinks`), one driver thread per
+sink, as the reference's Step Functions Map builds its gold CTAS in
+parallel (SURVEY §3.1 step 4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
+
+
+def run_sinks(spark: SparkSession, sinks: Sequence[Callable[[], None]]) -> None:
+    """Run independent writes at once, one thread per sink.
+
+    Each thread inherits the caller's job group, description, tags and
+    scheduler pool (`inheritable_thread_target(spark)`), so every job a
+    sink starts is attributed like one the caller started itself. Under
+    the default FIFO scheduler a later job never takes task slots from
+    an earlier one: the overlap only fills idle cores and hides each
+    job's driver-side latency (planning, scheduling, commit).
+
+    Every sink runs to completion; the first failure in `sinks` order is
+    then re-raised.
+    """
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(sink)) for sink in sinks]
+    for future in futures:  # all done: leaving the pool waited for them
+        future.result()
 
 
 def write_parquet_partitioned(
